@@ -451,14 +451,20 @@ def _testdata_generation(sf_dir: str) -> str:
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")))
-    generation = _testdata_generation(sf_dir)
-
     from big_data_analysis_of_airline_data_set_spark.plans import all_queries
     from big_data_analysis_of_airline_data_set_spark.plans.events_queries import (
         ensure_events_landed,
     )
-    from big_data_analysis_of_airline_data_set_spark.session import get_session
+    from big_data_analysis_of_airline_data_set_spark.session import (
+        env_number,
+        get_session,
+    )
+
+    # both knobs are parsed before any work, so a malformed value fails
+    # in the first second instead of after the headline suite
+    repeats = max(1, env_number("SPARK_GRAFT_BENCH_REPEATS", 3))
+    steal_rerun_pct = env_number("SPARK_GRAFT_STEAL_RERUN_PCT", 3.5, float)
+    generation = _testdata_generation(sf_dir)
 
     bench_t_all0, bench_t_st0 = _cpu_times()
 
@@ -498,7 +504,6 @@ def main() -> None:
     # better-fenced (lower-steal) sample is reported; both samples stay
     # in the record. Threshold default 3.5% sits between the quiet-host
     # samples (2.3-3.1%) and the r12 steal-hit ones (4.2-6.8%).
-    steal_rerun_pct = float(os.environ.get("SPARK_GRAFT_STEAL_RERUN_PCT", "3.5"))
     if hl_steal is not None and hl_steal > steal_rerun_pct:
         print(
             f"# headline steal {hl_steal}% > {steal_rerun_pct}% — re-running"

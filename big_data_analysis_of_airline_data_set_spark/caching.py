@@ -1,20 +1,30 @@
-"""Bounded per-session caches.
+"""Driver-side resource lifetimes: one mechanism each.
 
-Several catalog queries memoize expensive session-scoped artifacts so
-two views of the same result never recompute it (a tuned MLlib fit, a
-persisted IVF index, a landed streaming directory, a schema-drift
-verdict). In batch jobs the process exits and the dict dies with it;
-in a long-lived server session cycling many sf_dirs the round-3 advice
-stands: an unbounded dict keyed by (applicationId, sf_dir, ...) grows
-forever. Every such cache is a ``BoundedCache`` — true LRU (reads
-refresh recency), explicit ``clear()``, and an optional eviction
-callback for entries that own external resources (unpersist a
-DataFrame, remove a landed directory).
+Two lifetimes exist, and each has exactly one owner:
+
+- **Call-scoped** scratch dirs (stream checkpoints, upsert state,
+  sink round-trips) live in a stdlib
+  ``tempfile.TemporaryDirectory`` block around the call. Nothing reads
+  them after the function returns: drains are over once
+  ``awaitTermination()`` returns, and every round-trip materializes
+  its result before leaving the block.
+- **Session-scoped** memos (a tuned MLlib fit, a persisted IVF index
+  or edge table, a landed streaming directory, a Bloom/CMS build, a
+  schema-drift verdict) live in a module-level ``BoundedCache`` keyed
+  by (applicationId, sf_dir, ...): true LRU (reads refresh recency),
+  built on a miss by ``get_or_build``, and released through an
+  eviction hook when the entry owns an external resource
+  (``unpersist_quietly``, ``remove_dir``). Every cache registers
+  itself here, and ``clear_all`` — run once at interpreter exit —
+  releases every entry, so no dir a cache owns outlives the process.
 """
 
 from __future__ import annotations
 
+import atexit
 import logging
+import shutil
+import weakref
 from collections import OrderedDict
 from collections.abc import Callable
 from typing import Generic, TypeVar
@@ -23,6 +33,54 @@ _LOG = logging.getLogger(__name__)
 
 K = TypeVar("K")
 V = TypeVar("V")
+
+_CACHES: weakref.WeakSet[BoundedCache] = weakref.WeakSet()
+
+
+def _members(value) -> tuple:
+    return value if isinstance(value, tuple) else (value,)
+
+
+def unpersist_quietly(_key, value) -> None:
+    """Eviction hook for entries holding persisted frames (the value,
+    or any member of a tuple value, that has ``unpersist``). An entry
+    can outlive its SparkSession (keys carry the applicationId
+    precisely because sessions cycle), and unpersisting against a
+    stopped session raises — eviction releases best-effort, never
+    fails.
+
+    Plan-identity caveat (the PlanPin postmortem pattern): Spark's
+    CacheManager keys by canonical plan and is shared across sessions
+    of one SparkContext, so evicting an OLD session's entry whose plan
+    matches a LIVE session's freshly-cached twin (same sf_dir, new
+    applicationId) would evict the live entry too. The consequence is
+    a recompute, never wrongness, and the repo's one-session-per-
+    process discipline (session.get_session) makes the overlap
+    unreachable in practice — noted here because the failure would
+    look like an inexplicable cache miss, not an error."""
+    for member in _members(value):
+        if hasattr(member, "unpersist"):
+            try:
+                member.unpersist()
+            except Exception:
+                pass
+
+
+def remove_dir(_key, value) -> None:
+    """Eviction hook for entries owning an on-disk directory (the
+    value, or any ``str`` member of a tuple value, is its path)."""
+    for member in _members(value):
+        if isinstance(member, str):
+            shutil.rmtree(member, ignore_errors=True)
+
+
+def clear_all() -> None:
+    """Clear every live ``BoundedCache``, firing each eviction hook."""
+    for cache in list(_CACHES):
+        cache.clear()
+
+
+atexit.register(clear_all)
 
 
 class BoundedCache(Generic[K, V]):
@@ -37,11 +95,21 @@ class BoundedCache(Generic[K, V]):
         self.max_entries = max_entries
         self._on_evict = on_evict
         self._data: OrderedDict[K, V] = OrderedDict()
+        _CACHES.add(self)
 
     def get(self, key: K) -> V | None:
         hit = self._data.get(key)
         if hit is not None:
             self._data.move_to_end(key)
+        return hit
+
+    def get_or_build(self, key: K, build: Callable[[], V]) -> V:
+        """The cached value for ``key``; on a miss, ``build()`` it and
+        cache the result."""
+        hit = self.get(key)
+        if hit is None:
+            hit = build()
+            self.put(key, hit)
         return hit
 
     def put(self, key: K, value: V) -> None:
@@ -50,7 +118,7 @@ class BoundedCache(Generic[K, V]):
         # DataFrame values, unpersisting the old value here would evict
         # the Spark cache entry the (plan-identical) new value shares
         # (CacheManager keys by canonical plan — see PlanPin). Every
-        # current caller follows get-miss-build-put, so a re-put means
+        # current caller goes through get_or_build, so a re-put means
         # a same-plan rebuild and the replaced frame leaks nothing the
         # shared entry doesn't still own; a caller that re-puts
         # genuinely DIFFERENT resources under one key must release the

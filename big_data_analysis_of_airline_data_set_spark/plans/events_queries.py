@@ -15,7 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..caching import BoundedCache
+from ..caching import BoundedCache, remove_dir
 from ..sources.readers import read_testdata_table
 from ..streaming.windows import (
     json_extract_k,
@@ -48,35 +48,22 @@ FROM events GROUP BY 1, 2
 # re-read them across driver calls without re-landing (same pattern as
 # the IVF index cache in plans/content.py). ONE BoundedCache owns the
 # eviction/cleanup for all three landing variants (normal, doubled,
-# flat) — evicting removes the dir, and atexit clears everything
-# (round-3 advice: bounded, no leaked copies; round-4 review: no
-# copy-pasted eviction loops).
-def _evict_landed(key: tuple, path: str) -> None:
-    import shutil
-
-    shutil.rmtree(path, ignore_errors=True)
-
-
-_LANDED_CACHE: BoundedCache[tuple, str] = BoundedCache(4, on_evict=_evict_landed)
-_CLEANUP_REGISTERED = False
+# flat) — evicting removes the dir, and caching.clear_all removes every
+# dir at interpreter exit.
+_LANDED_CACHE: BoundedCache[tuple, str] = BoundedCache(4, on_evict=remove_dir)
 
 
 def _landed_dir(spark: SparkSession, key: tuple, prefix: str, build) -> str:
     """Shared landing-cache access: ``build(out_dir)`` materializes the
     variant on a miss."""
-    import atexit
     import tempfile
 
-    global _CLEANUP_REGISTERED
-    hit = _LANDED_CACHE.get(key)
-    if hit is None:
-        if not _CLEANUP_REGISTERED:
-            atexit.register(_LANDED_CACHE.clear)
-            _CLEANUP_REGISTERED = True
-        hit = tempfile.mkdtemp(prefix=prefix)
-        build(hit)
-        _LANDED_CACHE.put(key, hit)
-    return hit
+    def land() -> str:
+        out = tempfile.mkdtemp(prefix=prefix)
+        build(out)
+        return out
+
+    return _LANDED_CACHE.get_or_build(key, land)
 
 
 def _landed_events_dir(spark: SparkSession, sf_dir: str) -> str:

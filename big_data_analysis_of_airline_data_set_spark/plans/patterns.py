@@ -9,9 +9,12 @@ no scale truncation), so sums are order-independent and hash-equal.
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..caching import BoundedCache, unpersist_quietly
 from ..operators.asof import as_of_join
 from ..sources.readers import read_testdata_table
 from .spec import QuerySpec
@@ -609,9 +612,9 @@ def q_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_testdata_table(spark, sf_dir, "lineitem")
     # pre_distinct: (flag, orderkey) carries ~1.8x duplicates and every
     # row pays 2 md5s + a x96 explode — deduping first measured -23%
-    # (tests/ab_r13.py, r13); values identical by construction (min is
+    # (OPTIMIZATION_r13.md); values identical by construction (min is
     # duplicate-insensitive). The HLL twin measured +22% (1 md5, no
-    # fan-out) and stays pre_distinct=False.
+    # fan-out), so HLL has no pre-dedup arm.
     return kmv_distinct_by_group(
         li, group_col="l_returnflag", value_col="l_orderkey", k=_KMV_K,
         pre_distinct=True,
@@ -1012,7 +1015,7 @@ def q_kmv_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = _t(spark, sf_dir, "customer").select(
         F.lit("b").alias("g"), F.col("c_custkey").cast("string").alias("v")
     )
-    # pre_distinct measured -47% here (tests/ab_r13.py, r13): the x96
+    # pre_distinct measured -47% here (OPTIMIZATION_r13.md): the x96
     # explode fan-out is paid once per distinct key, not once per row
     sk = kmv_sketch(
         o.union(c), group_col="g", value_col="v", k=_KMVJ_K,
@@ -1085,33 +1088,9 @@ FROM wide CROSS JOIN exact
 
 # ------------------------- sink round-trips (S4/S5) -------------------------
 
-# temp sink dirs: bounded (oldest removed once >8 live — each round-trip
-# query consumes its own dir before returning control, so only the most
-# recent handful can still be referenced) and removed at interpreter
-# exit — the round-3 unbounded-session-cache lesson applied here too.
-_SINK_DIRS: list[str] = []
-_SINK_DIRS_MAX = 8
-_SINK_CLEANUP_REGISTERED = False
-
-
-def _sink_dir(prefix: str) -> str:
-    import atexit
-    import shutil
-    import tempfile
-
-    global _SINK_CLEANUP_REGISTERED
-    if not _SINK_CLEANUP_REGISTERED:
-        def _cleanup() -> None:
-            while _SINK_DIRS:
-                shutil.rmtree(_SINK_DIRS.pop(), ignore_errors=True)
-
-        atexit.register(_cleanup)
-        _SINK_CLEANUP_REGISTERED = True
-    while len(_SINK_DIRS) >= _SINK_DIRS_MAX:
-        shutil.rmtree(_SINK_DIRS.pop(0), ignore_errors=True)
-    d = tempfile.mkdtemp(prefix=prefix)
-    _SINK_DIRS.append(d)
-    return d
+# Every round-trip writes into a call-scoped temp dir and materializes
+# its (small) result with collect() before the dir is removed, so the
+# returned frame never reads a deleted path.
 
 
 def q_sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1127,24 +1106,22 @@ def q_sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").withColumn(
         "ship_year", F.year("l_shipdate")
     )
-    out = _sink_dir("sink_part_rt_")
-    write_parquet(li, out, partition_by=["ship_year"])
-    back = spark.read.parquet(out)
-    agg = (
-        back.groupBy(F.col("ship_year").cast("long").alias("ship_year"))
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
+    with tempfile.TemporaryDirectory(
+        prefix="sink_part_rt_", ignore_cleanup_errors=True
+    ) as out:
+        write_parquet(li, out, partition_by=["ship_year"])
+        back = spark.read.parquet(out)
+        agg = (
+            back.groupBy(F.col("ship_year").cast("long").alias("ship_year"))
+            .agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
+                .cast("double")
+                .alias("sum_price"),
+            )
         )
-    )
-    # materialize NOW (a handful of per-year rows): the returned frame
-    # must not lazily read a temp dir that eviction/atexit may remove
-    # before a caller collects
-    return spark.createDataFrame(
-        agg.collect(), "ship_year long, n_rows long, sum_price double"
-    )
+        rows = agg.collect()
+    return spark.createDataFrame(rows, "ship_year long, n_rows long, sum_price double")
 
 
 _SINK_PART_ORACLE = """
@@ -1171,13 +1148,13 @@ def q_sink_report_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("total_price"),
     )
-    out = _sink_dir("sink_csv_rt_")
-    write_report_csv(report, out)
     schema = "o_orderpriority string, n_orders long, total_price double"
-    back = spark.read.csv(out, header=True, schema=schema)
-    # materialize NOW — same temp-dir-lifetime reasoning as the
-    # partitioned round-trip above
-    return spark.createDataFrame(back.collect(), schema)
+    with tempfile.TemporaryDirectory(
+        prefix="sink_csv_rt_", ignore_cleanup_errors=True
+    ) as out:
+        write_report_csv(report, out)
+        rows = spark.read.csv(out, header=True, schema=schema).collect()
+    return spark.createDataFrame(rows, schema)
 
 
 _SINK_CSV_ORACLE = """
@@ -1199,22 +1176,25 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import write_orc
 
     o = _t(spark, sf_dir, "orders")
-    out = _sink_dir("sink_orc_rt_")
-    write_orc(o, out, partition_by=["o_orderstatus"])
-    back = spark.read.orc(out)
-    agg = back.groupBy(
-        F.col("o_orderstatus").cast("string").alias("o_orderstatus")
-    ).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-        .cast("double")
-        .alias("total_price"),
-        (F.unix_micros(F.max("o_orderdate")) / F.lit(86_400_000_000))
-        .cast("long")
-        .alias("max_orderdate_day"),
-    )
+    with tempfile.TemporaryDirectory(
+        prefix="sink_orc_rt_", ignore_cleanup_errors=True
+    ) as out:
+        write_orc(o, out, partition_by=["o_orderstatus"])
+        back = spark.read.orc(out)
+        agg = back.groupBy(
+            F.col("o_orderstatus").cast("string").alias("o_orderstatus")
+        ).agg(
+            F.count(F.lit(1)).alias("n_orders"),
+            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+            .cast("double")
+            .alias("total_price"),
+            (F.unix_micros(F.max("o_orderdate")) / F.lit(86_400_000_000))
+            .cast("long")
+            .alias("max_orderdate_day"),
+        )
+        rows = agg.collect()
     return spark.createDataFrame(
-        agg.collect(),
+        rows,
         "o_orderstatus string, n_orders long, total_price double,"
         " max_orderdate_day long",
     )
@@ -1241,18 +1221,21 @@ def q_sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.writers import write_jsonl
 
     c = _t(spark, sf_dir, "customer")
-    out = _sink_dir("sink_jsonl_rt_")
-    write_jsonl(c, out)
-    back = spark.read.schema(c.schema).json(out)
-    agg = back.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("n_customers"),
-        F.sum(F.round(F.col("c_acctbal"), 2).cast("decimal(18,2)"))
-        .cast("double")
-        .alias("sum_acctbal"),
-        F.count_distinct("c_nationkey").alias("n_nations"),
-    )
+    with tempfile.TemporaryDirectory(
+        prefix="sink_jsonl_rt_", ignore_cleanup_errors=True
+    ) as out:
+        write_jsonl(c, out)
+        back = spark.read.schema(c.schema).json(out)
+        agg = back.groupBy("c_mktsegment").agg(
+            F.count(F.lit(1)).alias("n_customers"),
+            F.sum(F.round(F.col("c_acctbal"), 2).cast("decimal(18,2)"))
+            .cast("double")
+            .alias("sum_acctbal"),
+            F.count_distinct("c_nationkey").alias("n_nations"),
+        )
+        rows = agg.collect()
     return spark.createDataFrame(
-        agg.collect(),
+        rows,
         "c_mktsegment string, n_customers long, sum_acctbal double,"
         " n_nations long",
     )
@@ -1287,51 +1270,55 @@ def q_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = _t(spark, sf_dir, "lineitem").select(
         F.col("l_orderkey").alias("o_orderkey"), "l_quantity"
     )
-    for name, df in (("sg_bkt_orders", orders), ("sg_bkt_lineitem", li)):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        write_bucketed_table(
-            df,
-            name,
-            bucket_by="o_orderkey",
-            num_buckets=8,
-            sort_by="o_orderkey",
-            path=_sink_dir(f"bkt_{name}_"),
-        )
-    key = "spark.sql.autoBroadcastJoinThreshold"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "-1")
-    try:
-        joined = bucketed_join(
-            spark, "sg_bkt_orders", "sg_bkt_lineitem", "o_orderkey"
-        )
-        jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-            "simple"
-        )
-        plan = joined._jdf.queryExecution().explainString(jmode)
-        if "SortMergeJoin" not in plan or "Exchange" in plan:
-            raise AssertionError(
-                "bucketed join must plan as Exchange-free SortMergeJoin:\n"
-                + plan
+    tables = (("sg_bkt_orders", orders), ("sg_bkt_lineitem", li))
+    with tempfile.TemporaryDirectory(prefix="bkt_", ignore_cleanup_errors=True) as base:
+        for name, df in tables:
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            write_bucketed_table(
+                df,
+                name,
+                bucket_by="o_orderkey",
+                num_buckets=8,
+                sort_by="o_orderkey",
+                path=f"{base}/{name}",
             )
-        agg = joined.groupBy(
-            (F.col("o_orderkey") % 8).alias("key_mod")
-        ).agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.sum(F.col("l_quantity").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_qty"),
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_price"),
-        )
-        # materialize inside the conf window AND before the temp table
-        # dirs become evictable
-        return spark.createDataFrame(
-            agg.collect(),
-            "key_mod long, n_rows long, sum_qty double, sum_price double",
-        )
-    finally:
-        spark.conf.set(key, saved)
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        saved = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            joined = bucketed_join(
+                spark, "sg_bkt_orders", "sg_bkt_lineitem", "o_orderkey"
+            )
+            jmode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "simple"
+            )
+            plan = joined._jdf.queryExecution().explainString(jmode)
+            if "SortMergeJoin" not in plan or "Exchange" in plan:
+                raise AssertionError(
+                    "bucketed join must plan as Exchange-free SortMergeJoin:\n"
+                    + plan
+                )
+            agg = joined.groupBy(
+                (F.col("o_orderkey") % 8).alias("key_mod")
+            ).agg(
+                F.count(F.lit(1)).alias("n_rows"),
+                F.sum(F.col("l_quantity").cast("decimal(18,2)"))
+                .cast("double")
+                .alias("sum_qty"),
+                F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+                .cast("double")
+                .alias("sum_price"),
+            )
+            # materialize inside the conf window AND before the table
+            # dirs are removed; the tables must not outlive their dirs
+            rows = agg.collect()
+        finally:
+            spark.conf.set(key, saved)
+            for name, _ in tables:
+                spark.sql(f"DROP TABLE IF EXISTS {name}")
+    return spark.createDataFrame(
+        rows, "key_mod long, n_rows long, sum_qty double, sum_price double"
+    )
 
 
 _BUCKETED_JOIN_ORACLE = """
@@ -1557,34 +1544,13 @@ _TRI_TOPK = 10
 _TRI_PCT = 0.9
 
 
-def _unpersist_quietly(_key, frame: DataFrame) -> None:
-    """BoundedCache eviction hook for persisted frames: an entry can
-    outlive its SparkSession (keys carry the applicationId precisely
-    because sessions cycle), and unpersisting against a stopped
-    session raises — eviction must release best-effort, never fail.
-
-    Plan-identity caveat (the caching.PlanPin postmortem pattern):
-    Spark's CacheManager keys by canonical plan and is shared across
-    sessions of one SparkContext, so evicting an OLD session's entry
-    whose plan matches a LIVE session's freshly-cached twin (same
-    sf_dir, new applicationId) would evict the live entry too. The
-    consequence is a recompute, never wrongness, and the repo's
-    one-session-per-process discipline (session.get_session) makes
-    the overlap unreachable in practice — noted here because the
-    failure would look like an inexplicable cache miss, not an error."""
-    try:
-        frame.unpersist()
-    except Exception:
-        pass
-
-
 # The co-occurrence table is PCT-INDEPENDENT: every co-supplier graph
 # query (triangles at pct 0.9, k-core and LPA at 0.5) consumes the same
 # (u, v, shared-part-count) frame and only the threshold filter
 # differs. Building it is the dominant cost of all three queries
 # (lineitem-wide shuffles), so one persisted copy per (session, sf_dir)
 # serves the whole family; eviction unpersists (round-8 verdict #3).
-_CO_CACHE = None
+_CO_CACHE: BoundedCache[tuple, DataFrame] = BoundedCache(4, on_evict=unpersist_quietly)
 
 
 def _co_supplier_co(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1606,14 +1572,7 @@ def _co_supplier_co(spark: SparkSession, sf_dir: str) -> DataFrame:
     to co-occurrence counting, not to this shape. TPC-H bounds d at
     ~4-8 suppliers/part at every SF. For corpora with unbounded hot
     keys, cap or salt the per-part array upstream."""
-    global _CO_CACHE
-    from ..caching import BoundedCache
-
-    if _CO_CACHE is None:
-        _CO_CACHE = BoundedCache(4, on_evict=_unpersist_quietly)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CO_CACHE.get(key)
-    if hit is None:
+    def build() -> DataFrame:
         li = _t(spark, sf_dir, "lineitem")
         per_part = (
             li.select(
@@ -1630,11 +1589,10 @@ def _co_supplier_co(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.slice(F.col("ss"), F.col("i") + F.lit(2), F.size("ss"))
             ).alias("v"),
         )
-        hit = (
-            pairs.groupBy("u", "v").agg(F.count(F.lit(1)).alias("c")).persist()
-        )
-        _CO_CACHE.put(key, hit)
-    return hit
+        return pairs.groupBy("u", "v").agg(F.count(F.lit(1)).alias("c")).persist()
+
+    key = (spark.sparkContext.applicationId, sf_dir)
+    return _CO_CACHE.get_or_build(key, build)
 
 
 def _co_supplier_edges(spark: SparkSession, sf_dir: str, pct: float) -> DataFrame:

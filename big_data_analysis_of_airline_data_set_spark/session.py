@@ -22,8 +22,24 @@ from pyspark.sql import SparkSession
 DEFAULT_APP_NAME = "big-data-analysis-airline-spark"
 
 
+def env_number(name: str, default, kind=int, *, minimum=None):
+    """``kind(os.environ[name])``, or ``default`` when unset. A value
+    that does not parse, or is below ``minimum``, raises a ValueError
+    naming the variable and the bad value."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
+    try:
+        value = kind(raw)
+    except ValueError:
+        raise ValueError(f"{name}={raw!r} is not a valid {kind.__name__}") from None
+    if minimum is not None and value < minimum:
+        raise ValueError(f"{name}={raw!r} must be >= {minimum}")
+    return value
+
+
 def _default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+    return env_number("SPARK_GRAFT_CPUS", os.cpu_count() or 8, minimum=1)
 
 
 def get_session(

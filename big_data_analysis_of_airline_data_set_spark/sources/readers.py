@@ -197,22 +197,20 @@ def read_testdata_table(spark: SparkSession, sf_dir: str, name: str) -> DataFram
     # relation setup (footer read + py4j round-trips), which multiplied
     # across every table touch of every query measurably drags the
     # bench; files under a given path don't change type mid-session.
-    key = (spark.sparkContext.applicationId, path)
-    verdict = _SCHEMA_VERDICT_CACHE.get(key)
-    if verdict is None:
-        df = read_parquet_table(spark, path)
-        on_disk = {f.name: f.dataType for f in df.schema.fields}
-        verdict = (
-            "pin"
-            if all(
-                f.name in on_disk and _pinnable(on_disk[f.name], f.dataType)
-                for f in expected.fields
-            )
-            else "align"
+    # (A miss that ends in "align" scans the footer once more below;
+    # align means drifted testdata, never the fast path.)
+    def verdict_of_footer() -> str:
+        on_disk = {
+            f.name: f.dataType for f in read_parquet_table(spark, path).schema.fields
+        }
+        pinnable = all(
+            f.name in on_disk and _pinnable(on_disk[f.name], f.dataType)
+            for f in expected.fields
         )
-        _SCHEMA_VERDICT_CACHE.put(key, verdict)
-        if verdict == "align":
-            return _align_to_schema(df, expected, name)
+        return "pin" if pinnable else "align"
+
+    key = (spark.sparkContext.applicationId, path)
+    verdict = _SCHEMA_VERDICT_CACHE.get_or_build(key, verdict_of_footer)
     if verdict == "pin":
         return read_parquet_table(spark, path, expected)
     return _align_to_schema(read_parquet_table(spark, path), expected, name)

@@ -104,12 +104,14 @@ def run_dedup_ingest_available_now(
         fresh.select("fingerprint").write.mode("append").parquet(store_dir)
         fresh.unpersist()
 
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt-{query_name}-")
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory(
+        prefix=f"ckpt-{query_name}-", ignore_cleanup_errors=True
+    ) as checkpoint:
+        q = (
+            stream.writeStream.foreachBatch(sink)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
     return spark.read.parquet(out_dir)

@@ -20,7 +20,6 @@ so batch and stream plans are column-for-column identical.
 
 from __future__ import annotations
 
-import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -82,26 +81,6 @@ LAST_PROGRESS: dict[str, list[dict]] = {}
 # this flag and always drain to memory.
 DRAIN_SINK = "memory"
 
-# Base directory for the per-drain checkpoint tempdirs (None = the
-# system temp dir). Hypothesis tested in round 13: the checkpoint WAL
-# (offsets/commits) fsyncs per micro-batch and the HDFS-backed state
-# store writes per-partition delta files per batch, so a disk-backed
-# temp dir might tax short drains. MEASURED NEUTRAL (tests/ab_stream.py,
-# 3 drains, same-session interleaved, steal 0.93%: /dev/shm 11.28 s vs
-# ext4 11.255 s total — the page cache absorbs the writes) and the
-# RocksDB state-store provider measured +12% on the same drains (native
-# overhead at dimension-sized state), so BOTH stay off; the remaining
-# drain wall is per-micro-batch scheduling, which is the file-granular
-# semantic. The hook stays for ab_stream.py re-measurement on hosts
-# where the filesystem is not page-cache-friendly.
-CKPT_BASE: str | None = None
-
-
-def _mkckpt(prefix: str) -> str:
-    base = CKPT_BASE if CKPT_BASE and os.path.isdir(CKPT_BASE) else None
-    return tempfile.mkdtemp(prefix=prefix, dir=base)
-
-
 def _run_to_memory(
     result: DataFrame,
     *,
@@ -135,29 +114,31 @@ def _run_to_memory(
         saved = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:
-        checkpoint = _mkckpt(f"ckpt-{query_name}-")
-        if DRAIN_SINK == "noop":
-            q = (
-                result.writeStream.format("noop")
-                .outputMode(output_mode)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
-            spark.createDataFrame([], result.schema).createOrReplaceTempView(
-                query_name
-            )
-        else:
-            q = (
-                result.writeStream.format("memory")
-                .queryName(query_name)
-                .outputMode(output_mode)
-                .option("checkpointLocation", checkpoint)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        with tempfile.TemporaryDirectory(
+            prefix=f"ckpt-{query_name}-", ignore_cleanup_errors=True
+        ) as checkpoint:
+            if DRAIN_SINK == "noop":
+                q = (
+                    result.writeStream.format("noop")
+                    .outputMode(output_mode)
+                    .option("checkpointLocation", checkpoint)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
+                spark.createDataFrame([], result.schema).createOrReplaceTempView(
+                    query_name
+                )
+            else:
+                q = (
+                    result.writeStream.format("memory")
+                    .queryName(query_name)
+                    .outputMode(output_mode)
+                    .option("checkpointLocation", checkpoint)
+                    .trigger(availableNow=True)
+                    .start()
+                )
+                q.awaitTermination()
         try:
             LAST_PROGRESS[query_name] = list(q.recentProgress)
         except Exception:  # noqa: BLE001 — observability must never fail a drain
@@ -561,11 +542,6 @@ def upsert_latest_state(existing: DataFrame | None, delta: DataFrame) -> DataFra
     )
 
 
-_UPSERT_DIRS: list[str] = []
-_UPSERT_DIRS_MAX = 8
-_UPSERT_CLEANUP_REGISTERED = False
-
-
 def run_upsert_sink_stream_available_now(
     spark: SparkSession,
     events_dir: str,
@@ -590,62 +566,43 @@ def run_upsert_sink_stream_available_now(
     join is state-sized per batch, and a real deployment would use a
     MERGE-capable table format instead of the generation swap.
 
-    Temp-dir hygiene (review finding, hardened after a second review):
-    the state base dirs are a bounded registry cleaned at interpreter
-    exit, with the OLDEST bases removed once the registry exceeds its
-    cap. The returned frame is an EAGER localCheckpoint of the final
-    state — materialized into Spark block storage, so it no longer
-    reads the parquet dir lazily and a later call evicting that dir
-    cannot give an earlier caller a file-not-found (the pre-hardening
-    failure mode: >8 calls in one process invalidated the oldest
-    unread result). Checkpoint blocks are freed by the ContextCleaner
-    when the frame is dropped; the stream checkpoint dir, never read
-    again after awaitTermination, is removed immediately."""
+    Temp-dir hygiene: the state generations and the stream checkpoint
+    live in call-scoped temp dirs removed before this returns, so the
+    returned frame is an EAGER localCheckpoint of the final state —
+    materialized into Spark block storage, never reading the parquet
+    dir lazily. Checkpoint blocks are freed by the ContextCleaner when
+    the frame is dropped."""
     import shutil
 
-    global _UPSERT_CLEANUP_REGISTERED
-    import atexit
+    with tempfile.TemporaryDirectory(
+        prefix=f"upsert-{query_name}-", ignore_cleanup_errors=True
+    ) as base:
+        state: dict[str, str | None] = {"dir": None}
 
-    if not _UPSERT_CLEANUP_REGISTERED:
-        def _cleanup() -> None:
-            while _UPSERT_DIRS:
-                shutil.rmtree(_UPSERT_DIRS.pop(), ignore_errors=True)
+        def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
+            existing = (
+                spark.read.parquet(state["dir"]) if state["dir"] is not None else None
+            )
+            merged = upsert_latest_state(existing, batch_df)
+            new_dir = f"{base}/gen_{batch_id}"
+            merged.write.mode("overwrite").parquet(new_dir)
+            old = state["dir"]
+            state["dir"] = new_dir
+            if old is not None:
+                shutil.rmtree(old, ignore_errors=True)
 
-        atexit.register(_cleanup)
-        _UPSERT_CLEANUP_REGISTERED = True
-    while len(_UPSERT_DIRS) >= _UPSERT_DIRS_MAX:
-        shutil.rmtree(_UPSERT_DIRS.pop(0), ignore_errors=True)
-    base = tempfile.mkdtemp(prefix=f"upsert-{query_name}-")
-    _UPSERT_DIRS.append(base)
-    state: dict[str, str | None] = {"dir": None}
-
-    def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        existing = (
-            spark.read.parquet(state["dir"]) if state["dir"] is not None else None
+        stream = events_stream_reader(
+            spark, events_dir, max_files_per_trigger=max_files_per_trigger
         )
-        merged = upsert_latest_state(existing, batch_df)
-        new_dir = f"{base}/gen_{batch_id}"
-        merged.write.mode("overwrite").parquet(new_dir)
-        old = state["dir"]
-        state["dir"] = new_dir
-        if old is not None:
-            shutil.rmtree(old, ignore_errors=True)
-
-    stream = events_stream_reader(
-        spark, events_dir, max_files_per_trigger=max_files_per_trigger
-    )
-    checkpoint = _mkckpt(f"ckpt-{query_name}-")
-    q = (
-        stream.writeStream.foreachBatch(merge_batch)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    shutil.rmtree(checkpoint, ignore_errors=True)
-    if state["dir"] is None:  # empty source → empty state, right schema
-        return spark.createDataFrame(
-            [], "user_id long, ts timestamp, event_id long, value double"
+        q = (
+            stream.writeStream.foreachBatch(merge_batch)
+            .option("checkpointLocation", f"{base}/checkpoint")
+            .trigger(availableNow=True)
+            .start()
         )
-    # eager: the result must survive this base dir's later eviction
-    return spark.read.parquet(state["dir"]).localCheckpoint(eager=True)
+        q.awaitTermination()
+        if state["dir"] is None:  # empty source → empty state, right schema
+            return spark.createDataFrame(
+                [], "user_id long, ts timestamp, event_id long, value double"
+            )
+        return spark.read.parquet(state["dir"]).localCheckpoint(eager=True)

@@ -48,12 +48,14 @@ def land_events_stream(
         # dynamic partition overwrite keeps re-delivered batches idempotent
         batch_df.write.mode("append").partitionBy("event_date").parquet(out_dir)
 
-    checkpoint = tempfile.mkdtemp(prefix=f"ckpt-{query_name}-")
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .queryName(query_name)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    with tempfile.TemporaryDirectory(
+        prefix=f"ckpt-{query_name}-", ignore_cleanup_errors=True
+    ) as checkpoint:
+        q = (
+            stream.writeStream.foreachBatch(sink)
+            .queryName(query_name)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()

@@ -47,19 +47,31 @@ def test_rejects_nonpositive_bound():
         BoundedCache(0)
 
 
-def test_module_caches_are_bounded():
-    """Every module-level session cache is a BoundedCache (or carries
-    its own explicit bound), so cycling many sf_dirs cannot grow any of
-    them past its cap."""
-    from big_data_analysis_of_airline_data_set_spark.plans import content, events_queries, ml_queries
-    from big_data_analysis_of_airline_data_set_spark.sources import readers
+def _package_modules():
+    """Import and return every module of the package."""
+    import importlib
+    import pkgutil
 
-    assert isinstance(ml_queries._FIT_CACHE, BoundedCache)
-    assert isinstance(ml_queries._REF_BANDS_CACHE, BoundedCache)
-    assert isinstance(content._IVF_CACHE, BoundedCache)
-    assert isinstance(content._FREQ_CACHE, BoundedCache)
-    assert isinstance(readers._SCHEMA_VERDICT_CACHE, BoundedCache)
-    assert isinstance(events_queries._LANDED_CACHE, BoundedCache)
+    import big_data_analysis_of_airline_data_set_spark as pkg
+
+    return [
+        importlib.import_module(info.name)
+        for info in pkgutil.walk_packages(pkg.__path__, pkg.__name__ + ".")
+    ]
+
+
+def test_module_caches_are_bounded():
+    """Every module-level session cache is a BoundedCache, so cycling
+    many sf_dirs cannot grow any of them past its cap."""
+    found = {
+        f"{mod.__name__}.{name}": value
+        for mod in _package_modules()
+        for name, value in vars(mod).items()
+        if name.endswith("_CACHE")
+    }
+    assert len(found) >= 11
+    loose = [name for name, value in found.items() if not isinstance(value, BoundedCache)]
+    assert not loose, f"module-level caches that are not BoundedCache: {loose}"
 
 
 def test_schema_verdict_cache_bounded_across_many_dirs():
@@ -71,21 +83,129 @@ def test_schema_verdict_cache_bounded_across_many_dirs():
     assert len(_SCHEMA_VERDICT_CACHE) <= cap
 
 
-def test_sink_dirs_bounded():
+def test_call_scoped_dirs_leave_no_leftovers(spark, sf_dir, tmp_path, monkeypatch):
+    """A stream drain and a sink round-trip own their scratch dirs for
+    the call only: with the temp root pointed at tmp_path, no ckpt-* or
+    sink_* dir is left once each returns, and both results still read."""
+    import os
+    import tempfile
+
+    from big_data_analysis_of_airline_data_set_spark.plans.events_queries import (
+        _landed_events_dir,
+    )
+    from big_data_analysis_of_airline_data_set_spark.plans.patterns import (
+        q_sink_report_csv_roundtrip,
+    )
+    from big_data_analysis_of_airline_data_set_spark.streaming.jobs import (
+        run_tumbling_stream_available_now,
+    )
+
+    landed = _landed_events_dir(spark, sf_dir)  # session-scoped: outside tmp_path
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert q_sink_report_csv_roundtrip(spark, sf_dir).count() > 0
+    drained = run_tumbling_stream_available_now(
+        spark, landed, query_name="scoped_ckpt_check", max_files_per_trigger=None
+    )
+    assert drained.count() > 0
+    left = [p for p in os.listdir(tmp_path) if p.startswith(("ckpt-", "sink_"))]
+    assert not left, left
+
+
+def test_clear_all_empties_every_cache_and_fires_hooks(tmp_path, monkeypatch):
+    import weakref
+
+    from big_data_analysis_of_airline_data_set_spark import caching
+
+    # a private registry, so the package's own session caches survive
+    monkeypatch.setattr(caching, "_CACHES", weakref.WeakSet())
+    owned = tmp_path / "owned"
+    owned.mkdir()
+    dirs = BoundedCache(2, on_evict=caching.remove_dir)
+    dirs.put("k", str(owned))
+    seen = []
+    plain = BoundedCache(2, on_evict=lambda k, v: seen.append(k))
+    plain.put("a", 1)
+    caching.clear_all()
+    assert len(dirs) == 0 and len(plain) == 0
+    assert not owned.exists()
+    assert seen == ["a"]
+
+
+def test_unpersist_quietly_swallows_release_errors():
+    """An entry can outlive its session; releasing it must not raise."""
+    from big_data_analysis_of_airline_data_set_spark.caching import unpersist_quietly
+
+    class StaleFrame:
+        def unpersist(self):
+            raise RuntimeError("SparkContext was shut down")
+
+    unpersist_quietly("k", StaleFrame())
+    unpersist_quietly("k", (StaleFrame(), 42))
+
+
+def test_get_or_build_builds_once_per_key():
+    c = BoundedCache(2)
+    calls = []
+    for _ in range(3):
+        assert c.get_or_build("k", lambda: calls.append(1) or "v") == "v"
+    assert calls == [1]
+
+
+def test_resource_lifetimes_have_one_owner():
+    """Guard: interpreter-exit cleanup is registered only by caching.py,
+    and no module-level ``X = None`` is later rebound to a BoundedCache
+    through ``global`` (caches are built at import)."""
+    import ast
     import os
 
-    from big_data_analysis_of_airline_data_set_spark.plans import patterns
+    import big_data_analysis_of_airline_data_set_spark as pkg
 
-    made = [patterns._sink_dir("cache_test_sink_") for _ in range(20)]
-    assert len(patterns._SINK_DIRS) <= patterns._SINK_DIRS_MAX
-    # evicted dirs are actually gone; the newest survive
-    assert not os.path.isdir(made[0])
-    assert os.path.isdir(made[-1])
-    patterns._SINK_DIRS.clear()
-    for d in made:
-        import shutil
-
-        shutil.rmtree(d, ignore_errors=True)
+    root = os.path.dirname(pkg.__file__)
+    offenders = []
+    for dirpath, _, files in os.walk(root):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, root)
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Import):
+                    names = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom):
+                    names = [node.module or ""]
+                else:
+                    continue
+                if "atexit" in names and rel != "caching.py":
+                    offenders.append(f"{rel}:{node.lineno} imports atexit")
+            none_globals = set()
+            for node in tree.body:
+                targets = (
+                    node.targets if isinstance(node, ast.Assign)
+                    else [node.target] if isinstance(node, ast.AnnAssign)
+                    else []
+                )
+                value = getattr(node, "value", None)
+                if isinstance(value, ast.Constant) and value.value is None:
+                    none_globals |= {t.id for t in targets if isinstance(t, ast.Name)}
+            for fn in ast.walk(tree):
+                if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                declared = {
+                    n for g in ast.walk(fn) if isinstance(g, ast.Global) for n in g.names
+                }
+                for node in ast.walk(fn):
+                    if not (isinstance(node, ast.Assign) and isinstance(node.value, ast.Call)):
+                        continue
+                    func = node.value.func
+                    callee = func.id if isinstance(func, ast.Name) else getattr(func, "attr", "")
+                    rebound = {
+                        t.id for t in node.targets if isinstance(t, ast.Name)
+                    } & declared & none_globals
+                    if callee == "BoundedCache" and rebound:
+                        offenders.append(f"{rel}:{node.lineno} lazily builds {rebound}")
+    assert not offenders, offenders
 
 
 def test_rejects_none_values():
@@ -147,8 +267,8 @@ def test_plan_pin_release_of_unpinned_twin_is_noop(spark):
 
 
 def test_one_session_per_process_discipline(spark):
-    """Pins the discipline that makes _unpersist_quietly's
-    plan-identity caveat unreachable (plans/patterns.py: evicting an
+    """Pins the discipline that makes caching.unpersist_quietly's
+    plan-identity caveat unreachable (evicting an
     OLD session's cache entry whose canonical plan matches a LIVE
     session's twin would evict the live entry too, because Spark's
     CacheManager is shared across sessions of one SparkContext and

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_analysis_of_airline_data_set_spark.dedup.exact import drop_exact_duplicates
@@ -60,3 +61,24 @@ def test_drop_exact_duplicates_keeps_min_id(spark):
     kept = drop_exact_duplicates(df, "text")
     ids = sorted(r.doc_id for r in kept.collect())
     assert ids == [1, 2]  # deterministic min-id keeper
+
+
+@pytest.mark.parametrize(
+    "var, bad",
+    [
+        ("SPARK_GRAFT_CPUS", "four"),
+        ("SPARK_GRAFT_CPUS", "0"),
+        ("SPARK_GRAFT_BENCH_REPEATS", "3x"),
+        ("SPARK_GRAFT_STEAL_RERUN_PCT", "high"),
+    ],
+)
+def test_malformed_env_var_names_itself(var, bad, monkeypatch):
+    """A bad numeric env var fails before any work, with a message that
+    names the variable and the value (not a bare int()/float() error)."""
+    import bench
+    from big_data_analysis_of_airline_data_set_spark.session import _default_parallelism
+
+    monkeypatch.setenv(var, bad)
+    run = _default_parallelism if var == "SPARK_GRAFT_CPUS" else bench.main
+    with pytest.raises(ValueError, match=f"{var}='{bad}'"):
+        run()

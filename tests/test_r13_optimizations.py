@@ -6,9 +6,6 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from big_data_analysis_of_airline_data_set_spark.sketches.hll import (
-    hll_distinct_by_group,
-)
 from big_data_analysis_of_airline_data_set_spark.sketches.kmv import (
     kmv_distinct_by_group,
 )
@@ -30,14 +27,6 @@ def test_kmv_pre_distinct_is_value_identical(spark, sf_dir):
     kw = dict(group_col="l_returnflag", value_col="l_orderkey", k=16)
     assert _rows(kmv_distinct_by_group(li, pre_distinct=True, **kw)) == _rows(
         kmv_distinct_by_group(li, pre_distinct=False, **kw)
-    )
-
-
-def test_hll_pre_distinct_is_value_identical(spark, sf_dir):
-    li = read_testdata_table(spark, sf_dir, "lineitem")
-    kw = dict(group_col="l_returnflag", value_col="l_orderkey", p=6)
-    assert _rows(hll_distinct_by_group(li, pre_distinct=True, **kw)) == _rows(
-        hll_distinct_by_group(li, pre_distinct=False, **kw)
     )
 
 
