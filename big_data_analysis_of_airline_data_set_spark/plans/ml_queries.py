@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from ..caching import BoundedCache
 from ..functions.flight_exprs import delay_status
 from ..ml.train_job import fit_family, run_training_job, training_invariants
-from ..sources.readers import read_testdata_table
+from ..sources.readers import local_frame, read_testdata_table
 from .spec import QuerySpec
 
 _CATEGORICAL = ["l_returnflag", "l_linestatus"]
@@ -181,7 +181,7 @@ def _metrics_banded_query(family: str, tuner: str = "tvs"):
             (name, _METRIC_BANDS[name][0] <= v <= _METRIC_BANDS[name][1])
             for name, v in metrics.items()
         ]
-        return spark.createDataFrame(rows, "parameter string, within_band boolean")
+        return local_frame(spark, rows, "parameter string, within_band boolean")
 
     fn.__name__ = f"q_ml_{family}_{tuner}_metrics_banded"
     return fn
@@ -351,7 +351,8 @@ def q_ml_variant_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
         return rows
 
     key = (spark.sparkContext.applicationId, sf_dir)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _SWEEP_CACHE.get_or_build(key, build),
         "variant string, n_categorical long, n_numeric long, "
         "n_param_combos long, train_rows long, test_rows long, "
@@ -589,7 +590,8 @@ def q_ml_reference_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             flights.unpersist()
 
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         _REF_BANDS_CACHE.get_or_build(spark.sparkContext.applicationId, build),
         "check_name string, within_band boolean",
     )

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from ..caching import BoundedCache, unpersist_quietly
 from ..operators.asof import as_of_join
-from ..sources.readers import read_testdata_table
+from ..sources.readers import local_frame, read_testdata_table
 from .spec import QuerySpec
 
 
@@ -125,7 +125,7 @@ def q_range_join_bucketized(spark: SparkSession, sf_dir: str) -> DataFrame:
     trick that turns a broadcast-nested-loop range join into a hash
     join at scale."""
     o = _t(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(_BANDS, "band_id int, band_name string")
+    bands = local_frame(spark, _BANDS, "band_id int, band_name string")
     band_id = F.least(F.floor(F.col("o_totalprice") / 100_000), F.lit(4)).cast("int")
     return (
         o.withColumn("band_id", band_id)
@@ -1121,7 +1121,7 @@ def q_sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         rows = agg.collect()
-    return spark.createDataFrame(rows, "ship_year long, n_rows long, sum_price double")
+    return local_frame(spark, rows, "ship_year long, n_rows long, sum_price double")
 
 
 _SINK_PART_ORACLE = """
@@ -1154,7 +1154,7 @@ def q_sink_report_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) as out:
         write_report_csv(report, out)
         rows = spark.read.csv(out, header=True, schema=schema).collect()
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 _SINK_CSV_ORACLE = """
@@ -1193,7 +1193,8 @@ def q_sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("max_orderdate_day"),
         )
         rows = agg.collect()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "o_orderstatus string, n_orders long, total_price double,"
         " max_orderdate_day long",
@@ -1234,7 +1235,8 @@ def q_sink_jsonl_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("c_nationkey").alias("n_nations"),
         )
         rows = agg.collect()
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "c_mktsegment string, n_customers long, sum_acctbal double,"
         " n_nations long",
@@ -1316,8 +1318,8 @@ def q_join_bucketed_colocated(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.conf.set(key, saved)
             for name, _ in tables:
                 spark.sql(f"DROP TABLE IF EXISTS {name}")
-    return spark.createDataFrame(
-        rows, "key_mod long, n_rows long, sum_qty double, sum_price double"
+    return local_frame(
+        spark, rows, "key_mod long, n_rows long, sum_qty double, sum_price double"
     )
 
 
@@ -1382,7 +1384,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(20)
             .collect()
         )
-    return spark.createDataFrame(rows, "node string, rank double")
+    return local_frame(spark, rows, "node string, rank double")
 
 
 def _pagerank_oracle() -> str:
@@ -1462,7 +1464,8 @@ def q_graph_pagerank_converged(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(20)
             .collect()
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(r.node, r.rank, stopped) for r in rows],
         "node string, rank double, stopped_at long",
     )
@@ -1645,7 +1648,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_vertex.unpersist()
     e.unpersist()
     rows = [("TOTAL", int(total or 0))] + [(r.vertex, r.n_triangles) for r in top]
-    return spark.createDataFrame(rows, "vertex string, n_triangles long")
+    return local_frame(spark, rows, "vertex string, n_triangles long")
 
 
 _TRIANGLES_ORACLE = f"""

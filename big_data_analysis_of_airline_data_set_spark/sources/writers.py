@@ -10,7 +10,9 @@ single-threaded write that is an anti-pattern at any scale. Here:
   partition pruning).
 - Tiny report artifacts (metric tables, selected-feature lists — the S5
   pandas sinks) → single CSV is acceptable and kept, but implemented as
-  a driver-side write of an already-small DataFrame.
+  a driver-side write of an already-small DataFrame: the report tables
+  are built by ``readers.local_frame`` as ``LocalRelation``s, so the
+  write scans driver memory in one task and starts no Python worker.
 """
 
 from __future__ import annotations

@@ -6,11 +6,13 @@ selected-feature lists.
 
 Differences from the reference, by design:
 - one multi-column StringIndexer fit instead of a per-column loop
-  (N+1 jobs → 2, SURVEY.md §7.4.5);
+  (N+1 jobs → 2, SURVEY.md §7.4.5), and one ChiSquareTest feeding both
+  the chi-square report and the categorical top-N selection;
 - the script-2 list-mutation bug (removing from the iterated list,
   Scripts/2_...py:73-75) is NOT replicated — selections are computed
   functionally (SURVEY.md §2.12.7);
-- results land in small DataFrames (the reference's pandas-to-CSV tail
+- results land in small driver-side DataFrames (``LocalRelation``s via
+  ``sources.readers.local_frame``; the reference's pandas-to-CSV tail
   is the caller's concern via sources.writers.write_report_csv).
 """
 
@@ -18,9 +20,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from .chisquare import chi_square_test
+from ..sources.readers import local_frame
+from .chisquare import chi_square_frame, chi_square_results, top_by_p_value
 from .correlation import correlation_pairs_df
-from .selectors import select_univariate_categorical, select_univariate_continuous
+from .selectors import select_univariate_continuous
 from .variance import variance_threshold_select
 
 
@@ -41,10 +44,10 @@ def feature_selection_job(
     training jobs consume, reference S3)."""
     k = min(variance_k, len(numeric_cols))
     corr = correlation_pairs_df(spark, df, numeric_cols)
-    chi = chi_square_test(spark, df, categorical_cols, label_col)
-    sel_cat = select_univariate_categorical(
-        df, categorical_cols, label_col,
-        num_top=min(num_top_categorical, len(categorical_cols)),
+    chi_results = chi_square_results(df, categorical_cols, label_col)
+    chi = chi_square_frame(spark, chi_results)
+    sel_cat = top_by_p_value(
+        chi_results, min(num_top_categorical, len(categorical_cols))
     )
     sel_num = select_univariate_continuous(
         df, numeric_cols, label_col,
@@ -57,5 +60,5 @@ def feature_selection_job(
         + [("univariate_continuous", c) for c in sorted(sel_num)]
         + [("variance_threshold", c) for c in sorted(sel_var)]
     )
-    selected = spark.createDataFrame(selected_rows, "method string, feature string")
+    selected = local_frame(spark, selected_rows, "method string, feature string")
     return {"correlation": corr, "chi_square": chi, "selected": selected}

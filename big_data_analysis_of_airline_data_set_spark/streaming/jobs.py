@@ -32,6 +32,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..sources.readers import local_frame
 from .windows import tumbling_counts
 
 EVENTS_STREAM_SCHEMA = StructType(
@@ -126,7 +127,7 @@ def _run_to_memory(
                     .start()
                 )
                 q.awaitTermination()
-                spark.createDataFrame([], result.schema).createOrReplaceTempView(
+                local_frame(spark, [], result.schema).createOrReplaceTempView(
                     query_name
                 )
             else:
@@ -602,7 +603,7 @@ def run_upsert_sink_stream_available_now(
         )
         q.awaitTermination()
         if state["dir"] is None:  # empty source → empty state, right schema
-            return spark.createDataFrame(
-                [], "user_id long, ts timestamp, event_id long, value double"
+            return local_frame(
+                spark, [], "user_id long, ts timestamp, event_id long, value double"
             )
         return spark.read.parquet(state["dir"]).localCheckpoint(eager=True)

@@ -512,18 +512,16 @@ def test_mg_merge_deterministic_ties_and_guards():
         mg_merge({}, {1: 1}, 0)
 
 
-def test_spacesaving_stream_matches_batch_fold(spark):
+def test_spacesaving_stream_matches_batch_fold(spark, tmp_path):
     """File-granular drain ≡ the same fold applied per batch: state
     carries across micro-batches and n_seen ends at the corpus size."""
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from big_data_analysis_of_airline_data_set_spark.sketches.spacesaving import (
         spacesaving_stream,
     )
 
-    d = tempfile.mkdtemp(prefix="ss_stream_")
+    d = str(tmp_path)
     rows = [
         (i, "2024-01-01 00:00:00", i % 7, "a", float((i % 13) ** 2), None)
         for i in range(400)

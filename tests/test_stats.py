@@ -56,6 +56,44 @@ def test_multi_column_indexer_frequency_desc(spark, sf_dir):
         assert len(top_indexed) == 1 and top_indexed[0][0] == modal
 
 
+def test_categorical_selection_matches_stock_selector(spark, sf_dir):
+    """The categorical top-N ranks ChiSquareTest p-values itself; the
+    stock UnivariateFeatureSelector over the same indexed vectors is the
+    reference for every N, ties included (a copied column has the same
+    p-value, so feature order must break the tie)."""
+    from pyspark.ml.feature import UnivariateFeatureSelector, VectorAssembler
+
+    from big_data_analysis_of_airline_data_set_spark.stats.chisquare import (
+        chi_square_results,
+        top_by_p_value,
+    )
+    from big_data_analysis_of_airline_data_set_spark.stats.selectors import (
+        select_univariate_categorical,
+    )
+
+    o = (
+        read_testdata_table(spark, sf_dir, "orders")
+        .withColumn("label", (F.col("o_orderkey") % 2).cast("double"))
+        .withColumn("custkey_band", (F.col("o_custkey") % 5).cast("string"))
+        .withColumn("priority_copy", F.col("o_orderpriority"))
+    )
+    cols = ["o_orderstatus", "priority_copy", "custkey_band", "o_orderpriority"]
+    indexed, idx_cols = index_categoricals(o, cols)
+    vec = VectorAssembler(inputCols=idx_cols, outputCol="v").transform(indexed)
+    results = chi_square_results(o, cols, "label")
+    for k in range(1, len(cols) + 1):
+        selector = UnivariateFeatureSelector(
+            featuresCol="v", outputCol="sel", labelCol="label",
+            selectionMode="numTopFeatures",
+        )
+        selector.setFeatureType("categorical").setLabelType("categorical")
+        model = selector.setSelectionThreshold(k).fit(vec)
+        assert top_by_p_value(results, k) == [cols[i] for i in model.selectedFeatures], k
+    assert select_univariate_categorical(o, cols, "label", num_top=2) == top_by_p_value(
+        results, 2
+    )
+
+
 # ------------------------- Poisson bootstrap -------------------------
 
 

@@ -3,7 +3,6 @@ dedup, availableNow drain semantics."""
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 import pytest
@@ -23,12 +22,11 @@ def events_dir(spark, sf_dir):
     (the testdata single .parquet file works directly as a dir? no —
     readStream.parquet wants a directory), split into two files so
     maxFilesPerTrigger exercises multi-batch progress."""
-    d = tempfile.mkdtemp(prefix="events-stream-")
-    ev = read_testdata_table(spark, sf_dir, "events")
-    # write back as nanos-free parquet (ts already normalized to timestamp)
-    ev.repartition(2).write.mode("overwrite").parquet(d)
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="events-stream-") as d:
+        ev = read_testdata_table(spark, sf_dir, "events")
+        # write back as nanos-free parquet (ts already normalized to timestamp)
+        ev.repartition(2).write.mode("overwrite").parquet(d)
+        yield d
 
 
 @pytest.fixture(scope="module")
@@ -36,7 +34,7 @@ def stream_events_reader_schema():
     return None
 
 
-def test_stream_tumbling_matches_batch(spark, events_dir):
+def test_stream_tumbling_matches_batch(spark, events_dir, tmp_path):
     from pyspark.sql.types import (
         StructType, StructField, LongType, TimestampType, StringType, DoubleType,
     )
@@ -63,13 +61,11 @@ def test_stream_tumbling_matches_batch(spark, events_dir):
         spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(events_dir)
     ).withWatermark("ts", "30 minutes")
     result = tumbling_counts(stream)
-    import tempfile as tf
-
     q = (
         result.writeStream.format("memory")
         .queryName("sym_check")
         .outputMode("complete")
-        .option("checkpointLocation", tf.mkdtemp(prefix="ckpt-sym-"))
+        .option("checkpointLocation", str(tmp_path))
         .trigger(availableNow=True)
         .start()
     )
@@ -81,22 +77,19 @@ def test_stream_tumbling_matches_batch(spark, events_dir):
     assert got == expected
 
 
-def test_stream_dedup_within_watermark(spark, sf_dir):
+def test_stream_dedup_within_watermark(spark, sf_dir, tmp_path):
     """dropDuplicatesWithinWatermark removes an injected duplicate."""
-    d = tempfile.mkdtemp(prefix="events-dup-")
-    try:
-        ev = read_testdata_table(spark, sf_dir, "events").limit(100)
-        dup = ev.limit(5)  # duplicate first 5 event_ids
-        ev.union(dup).repartition(1).write.mode("overwrite").parquet(d)
+    d = str(tmp_path)
+    ev = read_testdata_table(spark, sf_dir, "events").limit(100)
+    dup = ev.limit(5)  # duplicate first 5 event_ids
+    ev.union(dup).repartition(1).write.mode("overwrite").parquet(d)
 
-        out = run_dedup_stream_available_now(
-            spark, d, query_name="dedup_check"
-        )
-        n_distinct = ev.select("event_id").distinct().count()
-        assert out.count() == n_distinct
-        assert out.select("event_id").distinct().count() == n_distinct
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    out = run_dedup_stream_available_now(
+        spark, d, query_name="dedup_check"
+    )
+    n_distinct = ev.select("event_id").distinct().count()
+    assert out.count() == n_distinct
+    assert out.select("event_id").distinct().count() == n_distinct
 
 
 def test_stream_runner_on_testdata_events(spark, sf_dir, events_dir):

@@ -4,7 +4,6 @@ sliding/session windows as real streams."""
 from __future__ import annotations
 
 import os
-import shutil
 import tempfile
 
 import pytest
@@ -23,38 +22,31 @@ from big_data_analysis_of_airline_data_set_spark.streaming.stateful import (
 
 @pytest.fixture(scope="module")
 def events_dir(spark, sf_dir):
-    d = tempfile.mkdtemp(prefix="events-x-")
-    read_testdata_table(spark, sf_dir, "events").repartition(2).write.mode(
-        "overwrite"
-    ).parquet(d)
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="events-x-") as d:
+        read_testdata_table(spark, sf_dir, "events").repartition(2).write.mode(
+            "overwrite"
+        ).parquet(d)
+        yield d
 
 
-def test_landing_batch_partitions_by_date(spark, sf_dir):
-    out = tempfile.mkdtemp(prefix="landed-")
-    try:
-        landed = land_events_batch(spark, sf_dir, out)
-        parts = [p for p in os.listdir(out) if p.startswith("event_date=")]
-        assert len(parts) >= 2
-        assert landed.count() == read_testdata_table(spark, sf_dir, "events").count()
-        assert dict(landed.dtypes)["ts"] == "timestamp"
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+def test_landing_batch_partitions_by_date(spark, sf_dir, tmp_path):
+    out = str(tmp_path)
+    landed = land_events_batch(spark, sf_dir, out)
+    parts = [p for p in os.listdir(out) if p.startswith("event_date=")]
+    assert len(parts) >= 2
+    assert landed.count() == read_testdata_table(spark, sf_dir, "events").count()
+    assert dict(landed.dtypes)["ts"] == "timestamp"
 
 
-def test_landing_stream_equals_batch(spark, events_dir):
-    out = tempfile.mkdtemp(prefix="landed-s-")
-    try:
-        land_events_stream(spark, events_dir, out)
-        landed = spark.read.parquet(out)
-        src = spark.read.parquet(events_dir)
-        assert landed.count() == src.count()
-        assert set(landed.select("event_date").distinct().toPandas()["event_date"]) == set(
-            src.select(F.to_date("ts").alias("d")).distinct().toPandas()["d"]
-        )
-    finally:
-        shutil.rmtree(out, ignore_errors=True)
+def test_landing_stream_equals_batch(spark, events_dir, tmp_path):
+    out = str(tmp_path)
+    land_events_stream(spark, events_dir, out)
+    landed = spark.read.parquet(out)
+    src = spark.read.parquet(events_dir)
+    assert landed.count() == src.count()
+    assert set(landed.select("event_date").distinct().toPandas()["event_date"]) == set(
+        src.select(F.to_date("ts").alias("d")).distinct().toPandas()["d"]
+    )
 
 
 def test_stateful_user_totals_match_batch(spark, events_dir):
@@ -79,10 +71,8 @@ def test_stateful_user_totals_match_batch(spark, events_dir):
 
 
 @pytest.mark.parametrize("transform", [sliding_counts, session_counts])
-def test_sliding_and_session_windows_stream(spark, events_dir, transform):
+def test_sliding_and_session_windows_stream(spark, events_dir, transform, tmp_path):
     """The batch-symmetric transforms run as REAL streams too."""
-    import tempfile as tf
-
     batch_expected = {tuple(r) for r in transform(spark.read.parquet(events_dir)).collect()}
     from big_data_analysis_of_airline_data_set_spark.streaming.jobs import (
         events_stream_reader,
@@ -95,7 +85,7 @@ def test_sliding_and_session_windows_stream(spark, events_dir, transform):
         result.writeStream.format("memory")
         .queryName(name)
         .outputMode("complete")
-        .option("checkpointLocation", tf.mkdtemp(prefix=f"ckpt-{name}-"))
+        .option("checkpointLocation", str(tmp_path))
         .trigger(availableNow=True)
         .start()
     )

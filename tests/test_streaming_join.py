@@ -4,7 +4,6 @@ dimension join works inside a stream."""
 
 from __future__ import annotations
 
-import shutil
 import tempfile
 
 import pytest
@@ -17,15 +16,14 @@ from big_data_analysis_of_airline_data_set_spark.streaming.jobs import events_st
 
 @pytest.fixture(scope="module")
 def events_dir(spark, sf_dir):
-    d = tempfile.mkdtemp(prefix="events-j-")
-    read_testdata_table(spark, sf_dir, "events").repartition(2).write.mode(
-        "overwrite"
-    ).parquet(d)
-    yield d
-    shutil.rmtree(d, ignore_errors=True)
+    with tempfile.TemporaryDirectory(prefix="events-j-") as d:
+        read_testdata_table(spark, sf_dir, "events").repartition(2).write.mode(
+            "overwrite"
+        ).parquet(d)
+        yield d
 
 
-def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_dir):
+def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_dir, tmp_path):
     expected = {
         (r.user_id, r.purchase_id, r.click_id)
         for r in q_interval_join(spark, sf_dir).collect()
@@ -58,7 +56,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_dir):
         joined.writeStream.format("memory")
         .queryName("ss_join")
         .outputMode("append")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt-ssj-"))
+        .option("checkpointLocation", str(tmp_path))
         .trigger(availableNow=True)
         .start()
     )
@@ -70,7 +68,7 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, events_dir):
     assert len(got) > 0
 
 
-def test_stream_static_dimension_join(spark, events_dir):
+def test_stream_static_dimension_join(spark, events_dir, tmp_path):
     """Static dim (user tier) joined into a stream — no watermark needed
     on the static side."""
     users = spark.range(0, 200).select(
@@ -83,7 +81,7 @@ def test_stream_static_dimension_join(spark, events_dir):
         enriched.writeStream.format("memory")
         .queryName("st_join")
         .outputMode("complete")
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="ckpt-stj-"))
+        .option("checkpointLocation", str(tmp_path))
         .trigger(availableNow=True)
         .start()
     )
